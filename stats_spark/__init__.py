@@ -5,7 +5,7 @@ conversation transcripts, with the query surface of the ``pkmn/stats``
 reference (see SURVEY.md).  Everything is expressed with the Spark
 DataFrame API (Catalyst-optimized); the single genuinely sequential
 operator — the per-conversation matchup FSM — runs as an Arrow-batched
-``applyInPandas`` over ``conv_id`` groups.
+``mapInPandas`` over whole conversations.
 
 Layout:
   datagen/     deterministic synthetic corpus + dimension tables

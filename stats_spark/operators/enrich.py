@@ -2,8 +2,8 @@
 
 Everything here is declarative DataFrame API — broadcast hash joins
 against the KB-sized dimension tables (SURVEY §2.4 J1–J5) and column
-math — so Catalyst keeps it inside whole-stage codegen.  The only
-Python is the Arrow-vectorized erf weighting UDF (A1).
+math — so Catalyst keeps it inside whole-stage codegen, the A1 erf
+weighting included (functions.weights.weighting_expr).
 
 Frames produced (all derived from the PARSE output `battles`):
 
@@ -13,8 +13,9 @@ Frames produced (all derived from the PARSE output `battles`):
               + computed stats, spread/stats strings, stalliness, bias
   side_class  per-side classification (bias, mean stalliness, tags)
               — classifier.ts:11-54 analog
-  mons_w      mons × explode(cutoffs) + erf weight + gxe
-  sides_w     sides ⋈ side_class × explode(cutoffs) + weight + gxe
+  mons_w      mons ⋈ side tags + with_cutoff_weights: cutoff_0..3
+              and erf weights w_0..3 as columns (the aggregates' input)
+  sides_w     sides ⋈ side_class + with_cutoff_weights
 """
 
 from __future__ import annotations
@@ -265,14 +266,17 @@ def cutoff_array_col(cutoffs=dims.DEFAULT_CUTOFFS):
             entries += [F.lit(fmt), F.array(*[F.lit(c) for c in cs])]
         mp = F.create_map(*entries)
         default = F.array(*[F.lit(c) for c in dims.DEFAULT_CUTOFFS])
-        return F.coalesce(mp.getItem(F.col("format")), default)
+        # try_element_at: null (not an ANSI error) on an unmapped name
+        return F.coalesce(F.try_element_at(mp, F.col("format")), default)
     return F.array(*[F.lit(c) for c in cutoffs])
 
 
 def explode_cutoffs(df: DataFrame,
                     cutoffs=dims.DEFAULT_CUTOFFS) -> DataFrame:
-    """A13 multi-cutoff fan-out: one pass computes every cutoff — the
-    dimension becomes an ordinary group-by column."""
+    """Row-form A13 fan-out: one row per (input row, cutoff).  Only
+    battles_w (plans.pipeline.battles_weighted) and the parity path's
+    legacy frames use it; the mons/sides aggregates take the wide
+    shape of with_cutoff_weights."""
     return df.withColumn("cutoff", F.explode(cutoff_array_col(cutoffs)))
 
 

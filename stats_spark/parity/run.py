@@ -3,10 +3,15 @@ LEGACY usage/leads reports byte-for-byte (reports.ts:98-172 with
 legacy=true, the mode integration.ts:57-67 generated the goldens in).
 
 The aggregation itself is the production engine: parse_battles →
-sides/mons frames → aggregate.usage_by_species / leads /
-battle_counts.  Only the dims payload (curated real gen data instead of
-the synthetic dims) and the format gate sets (the reference's legacy
-sets) differ.
+sides/mons frames → aggregate.usage_by_species / teammates /
+unique_players (fed the pipeline's wide cutoff shape,
+enrich.with_cutoff_weights) and leads / battle_counts / encounters
+(fed battles_weighted).  Only the dims payload (curated real gen data
+instead of the synthetic dims) and the format gate sets (the
+reference's legacy sets) differ.  The reference quirks the engine has
+no operator for — the legacy m-weight (``weight_m``) moveset maps, the
+per-slot metagame weights and the 'empty' teammate overwrite — are
+built here as row-form frames (enrich.explode_cutoffs + with_weight).
 """
 
 from __future__ import annotations
@@ -39,8 +44,7 @@ def build_format_frames(spark, fmt: str) -> dict:
             .select("*", F.col("mon.species").alias("species"),
                     F.col("mon.turns_out").alias("turns_out"))
             .drop("mon"))
-    mons_w = enrich.with_weight(enrich.explode_cutoffs(mons, CUTOFFS))
-    usage = agg.usage_by_species(mons_w)
+    usage = agg.usage_by_species(enrich.with_cutoff_weights(mons, CUTOFFS))
     totals = agg.usage_totals(usage)
 
     bw = battles_weighted(battles.filter("error IS NULL"), CUTOFFS,
@@ -255,7 +259,7 @@ def add_detailed_frames(spark, fmt: str, frames: dict) -> dict:
                                .alias("saved_count")))
 
     frames["d_teammates"] = agg.teammates(
-        sides_w.withColumn("team_size", F.size("team")))
+        enrich.with_cutoff_weights(sides, CUTOFFS))
     # the reference's 'empty' teammate is an order-dependent OVERWRITE,
     # not a sum: updateTeammates receives a FRESH {} for empty mons
     # (stats.ts:299-300), so pokemon[b].teammates['empty'] ends at the
@@ -286,9 +290,10 @@ def add_detailed_frames(spark, fmt: str, frames: dict) -> dict:
         .select("format").distinct().collect()}
     bw = battles_weighted(battles, CUTOFFS, non_singles=ns, non_6v6=n6)
     frames["d_encounters"] = agg.encounters(bw)
-    frames["d_unique"] = agg.unique_players(mons_w.select(
-        "format", "cutoff", "species", "player", "turns_out", "short",
-        "weight", "gxe"))
+    frames["d_unique"] = agg.unique_players(enrich.with_cutoff_weights(
+        mons.join(sides.select("conv_id", "side", "short", "gxe",
+                               "eff_rpr", "eff_rprd"),
+                  ["conv_id", "side"]), CUTOFFS))
     frames["d_viability"] = agg.viability(frames["d_unique"])
     return frames
 

@@ -1,12 +1,13 @@
 """The end-to-end parse → enrich → route → aggregate job.
 
 Spark restatement of the reference's `process smogon/stats` lifecycle
-(SURVEY §3.1): partition-pruned scan → cogrouped FSM parse → broadcast
+(SURVEY §3.1): partition-pruned scan → per-conversation FSM parse → broadcast
 enrich → cutoff/tag fan-out → hash aggregations → routed sinks with
 per-partition lineage records.
 
 Scale notes (the 100 TB story):
-  - transcripts and conversations shuffle ONCE each (the cogroup);
+  - transcripts and conversations shuffle ONCE each (the parse's
+    line-packing group-by and its join on conv_id);
     at cluster scale both tables are bucketed by conv_id, removing it.
   - battles is the compact intermediate (≈1/25th of transcripts); it
     is optionally checkpointed to parquet — the reference's per-(format,
@@ -28,7 +29,6 @@ from stats_spark.datagen import dims
 from stats_spark.operators import aggregate as agg
 from stats_spark.operators import enrich
 from stats_spark.operators.parse import parse_battles
-from stats_spark.functions.weights import weighting_expr  # noqa: F401 (parity/streaming callers import via this module)
 from stats_spark.sources import tables
 
 
@@ -147,10 +147,11 @@ def build_frames(spark: SparkSession, battles: DataFrame,
     phase leaves idle (measured ~4.5 of 8 busy).  Exceptions propagate
     through the future's result().
 
-    ``cache=True`` persists the three shared intermediates (the pruned
-    enriched mons, side_class, battles_w) — every sink reuses them
-    instead of re-running the enrichment; use when materializing
-    several sinks in one job.
+    ``cache=True`` persists the shared intermediates (the pruned
+    enriched mons, side_class, mons_w, sides_w, battles_w; listed in
+    ``frames["_cached"]``) — every sink reuses them instead of
+    re-running the enrichment; use when materializing several sinks in
+    one job.  The caller unpersists them when done (run_pipeline does).
 
     ``stage_dir`` switches to STAGED materialization: each shared
     intermediate is written to parquet under ``stage_dir`` (eagerly, at
@@ -169,13 +170,9 @@ def build_frames(spark: SparkSession, battles: DataFrame,
         cache = False
 
         def stage(df: DataFrame, name: str) -> DataFrame:
-            ts = time.time()
             path = os.path.join(stage_dir, name)
             df.write.mode("overwrite").parquet(path)
             rd = spark.read.parquet(path)
-            if os.environ.get("STATS_SPARK_STAGE_TIMING"):
-                print(f"STAGE_TIMING {name} {time.time() - ts:.1f}s",
-                      flush=True)
             # a compact staged frame (few dozen MB) packs into 1-2 scan
             # splits under maxPartitionBytes, and the explode-heavy
             # consumers then run their whole pre-shuffle CPU on one
@@ -256,8 +253,7 @@ def build_frames(spark: SparkSession, battles: DataFrame,
         # unpivot the grouped output (aggregate._stacked).  The explode
         # form quadrupled every shuffle row and hash-agg probe, making
         # the sink phase memory-bound at high core counts (BENCH.md).
-        wx = [f"cutoff_{i}" for i in range(enrich.N_CUTOFFS)] + \
-             [f"w_{i}" for i in range(enrich.N_CUTOFFS)]
+        wx = agg.CUTOFF_COLS + agg.WEIGHT_COLS
         mons_w = enrich.with_cutoff_weights(mons_j, cutoffs)
         sides_w = enrich.with_cutoff_weights(
             sides.join(side_class, ["conv_id", "side"]), cutoffs)
@@ -616,14 +612,10 @@ def run_pipeline(spark: SparkSession, corpus_paths: dict, out_dir: str,
         # the sinks are many *small* jobs — submit them concurrently so
         # scheduling overhead overlaps and the executors stay saturated
         # (Spark's scheduler interleaves jobs from multiple threads).
-        # Pool width is tunable: wide pools thrash the LLC/memory bus
+        # The width is capped: wide pools thrash the LLC/memory bus
         # when several explode-heavy jobs run at high core counts
         # (measured in BENCH.md's decomposition).
-        from concurrent.futures import ThreadPoolExecutor
-        default_width = max(2, min(6, spark.sparkContext.defaultParallelism
-                                   // 4))
-        width = int(os.environ.get("STATS_SPARK_SINK_POOL",
-                                   str(default_width)))
+        width = max(2, min(6, spark.sparkContext.defaultParallelism // 4))
         try:
             with ThreadPoolExecutor(max_workers=width) as pool:
                 for out in pool.map(lambda fn: fn(), tasks):
@@ -633,6 +625,10 @@ def run_pipeline(spark: SparkSession, corpus_paths: dict, out_dir: str,
         finally:
             if mat_pool is not None:
                 mat_pool.shutdown(wait=False, cancel_futures=True)
+            # the shared caches serve this run's sinks only; a
+            # long-lived session must not keep them after it returns
+            for df in frames["_cached"]:
+                df.unpersist()
         metrics += overlap_metrics
         if materialize != "stage":
             # cache materialization overlaps the sink pool by design;

@@ -194,7 +194,7 @@ def stream_usage(battles_stream: DataFrame,
                  cutoffs: list[int] | None = None) -> DataFrame:
     """Streamed usage counters: the batch enrichment column math
     applied directly to the battle stream (explode sides → teams →
-    cutoffs → erf weight → running per-species counters).  With
+    per-cutoff erf weight columns → running per-species counters).  With
     Trigger.AvailableNow + complete mode this reproduces the batch
     usage frame exactly; unbounded deployments swap in a watermarked
     window on ts."""
@@ -215,9 +215,8 @@ def stream_usage(battles_stream: DataFrame,
             .select("*", F.col("m.species").alias("species"),
                     F.col("m.turns_out").alias("turns_out"))
             .drop("m"))
-    mons_w = enrich.with_weight(
-        enrich.explode_cutoffs(mons, cutoffs or dims.DEFAULT_CUTOFFS))
-    return agg.usage_by_species(mons_w)
+    return agg.usage_by_species(enrich.with_cutoff_weights(
+        mons, cutoffs or dims.DEFAULT_CUTOFFS))
 
 
 def run_available_now(df: DataFrame, query_name: str,

@@ -21,7 +21,12 @@ pytestmark = pytest.mark.skipif(
 CUTOFFS = [0, 1500, 1630, 1760]
 
 
-@pytest.fixture(scope="module", params=fixtures.formats())
+# formats() lists the fixture directory, so it is only called when that
+# directory exists: pytest evaluates params at collection, before the
+# module's skipif applies
+@pytest.fixture(scope="module",
+                params=(fixtures.formats()
+                        if os.path.exists(fixtures.LOGS) else []))
 def fmt_frames(request, spark):
     fmt = request.param
     frames = run.build_format_frames(spark, fmt)
