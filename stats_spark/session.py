@@ -67,6 +67,16 @@ LOCAL_SQL_CONF = {
 }
 
 
+def default_driver_memory() -> str:
+    """A quarter of physical memory (the JVM's own default heap share),
+    at most 48g.  Local mode runs every task in the driver JVM and the
+    block manager sizes its cache pool from the heap, so a heap larger
+    than the machine lets cached frames pile up, never evicted, until
+    the OS kills the JVM."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1024, min(48 * 1024, phys // 4 // 2**20))}m"
+
+
 def get_submit_spark(app_name: str = "stats_spark_job",
                      extra_conf: dict | None = None) -> SparkSession:
     """Session for ``spark-submit --py-files`` launches: master, deploy
@@ -110,7 +120,8 @@ def get_spark(
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.driver.memory", os.environ.get("STATS_SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("STATS_SPARK_DRIVER_MEM",
+                                                      default_driver_memory()))
         .config("spark.ui.enabled", "false")
         # shuffle spill dir: this host's overlay /tmp serializes under
         # 32 concurrent writers (measured 2-4x sink slowdowns); tmpfs

@@ -24,10 +24,19 @@ def _load_bench():
 
 
 def _spawn(marker: str, seconds: float) -> subprocess.Popen:
-    # the marker rides in argv, so /proc/<pid>/cmdline contains it
-    return subprocess.Popen(
+    # the marker rides in argv, so /proc/<pid>/cmdline contains it —
+    # but only once the kernel has finished the exec: Popen can return
+    # while the child's cmdline still reads empty, so wait for it
+    p = subprocess.Popen(
         [sys.executable, "-c", f"import time; time.sleep({seconds})",
          marker])
+    deadline = time.time() + 10
+    while time.time() < deadline:
+        with open(f"/proc/{p.pid}/cmdline", "rb") as f:
+            if marker.encode() in f.read():
+                break
+        time.sleep(0.01)
+    return p
 
 
 def test_no_protocol_returns_immediately():

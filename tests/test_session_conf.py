@@ -62,3 +62,16 @@ def test_materialize_auto_is_topology_aware():
     # explicit choices pass through untouched
     assert resolve_materialize("local[8]", "stage") == "stage"
     assert resolve_materialize("yarn", "cache") == "cache"
+
+
+def test_default_driver_heap_fits_the_machine():
+    # a local-mode heap above physical memory never evicts cached
+    # frames; the JVM grows until the OS kills it mid-session
+    import os
+
+    from stats_spark.session import default_driver_memory
+
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    mb = int(default_driver_memory().rstrip("m"))
+    assert 1024 <= mb <= 48 * 1024
+    assert mb <= max(1024, phys_mb // 2)
